@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .arrow_lists import make_list_decoder
+
 # ---------------------------------------------------------------------------
 # Cache hygiene
 # ---------------------------------------------------------------------------
@@ -614,6 +616,7 @@ def _make_simhash_worker():
     Bit 63 is the long's sign bit: assembling the uint64 bit pattern and
     reinterpreting (.view) as int64 reproduces the old
     ``-(1<<63)``-term arithmetic exactly (two's complement)."""
+    lists, _ = make_list_decoder()
 
     def run(batches):
         import numpy as np
@@ -621,16 +624,16 @@ def _make_simhash_worker():
 
         for batch in batches:
             n = batch.num_rows
-            ids, hs = batch.column(0), batch.column(1)
+            ids = batch.column(0)
             if n == 0:
                 yield pa.RecordBatch.from_arrays(
                     [ids, pa.array([], type=pa.int64())],
                     [batch.schema.names[0], "simhash"],
                 )
                 continue
-            # offsets index into .values (NOT .flatten(), which re-bases)
-            off = hs.offsets.to_numpy().astype(np.int64)
-            flat = hs.values.to_numpy(zero_copy_only=False).astype(np.int64)
+            # values cut to [off[0], off[-1]]: the last reduceat segment
+            # must end at the batch's last hash, not at the buffer's end
+            flat, off = lists(batch.column(1), "simhash worker")
             counts = np.diff(off)
             if (counts <= 0).any():
                 # callers filter size>0; np.add.reduceat is wrong on
@@ -1056,9 +1059,10 @@ def dup_positions(g: DataFrame, pre_aggregate: bool = False) -> DataFrame:
     tests/test_llm_ops.py::test_dup_positions_preagg_identical and the
     family oracles).  GUARDED rather than default because on healthy
     corpora the packed aggregate measured +14/+29% on the per-doc span
-    queries at sf0.1 (interleaved A/B, OPTIMIZATION_r15.md) — enable it
-    for corpora where single documents repeat a gram at straggler scale;
-    the 16x mega-gram soak row records both paths."""
+    queries at sf0.1 (an interleaved A/B whose log was never recorded in
+    the repo) — enable it for corpora where single documents repeat a
+    gram at straggler scale; the 16x mega-gram soak row records both
+    paths."""
     wg = Window.partitionBy("gram")
     if not pre_aggregate:
         return (

@@ -5,77 +5,41 @@ string-similarity join — this is part of the LLM/data-cleaning surface the
 brief asks for beyond the contract (fuzzy key matching before a dedup or
 merge step: near-identical product names, OCR'd titles, user-typed labels).
 
-Algorithm — ED-Join-style q-gram prefix filtering (Xiao, Wang, Lin,
-VLDB'08 §3; prefix bound of Chaudhuri/Ganti/Kaushik, ICDE'06), then exact
-Levenshtein verification on candidates only:
+Algorithm — PassJoin partition blocking (Li, Deng & Feng, ICDE'11), then
+exact Levenshtein verification on candidates only:
 
-1.  Each string is padded with q-1 begin/end sentinels and cut into its
-    DISTINCT q-grams.  A single edit operation (insert/delete/substitute)
-    touches one position and therefore destroys at most q gram TYPES, so
-    two strings within edit distance d satisfy |G(a) \\ G(b)| <= q*d.
-2.  Order every string's gram set by a GLOBAL total order (document
-    frequency ascending, gram value as tie-break) and keep only the first
-    q*d + 1 grams — the PREFIX.  For any qualifying pair, the smallest
-    common gram g under that order is preceded, in each side's sorted set,
-    only by grams the other side lacks (anything smaller and shared would
-    contradict g's minimality) — at most q*d of them — so g sits inside
-    BOTH prefixes.  Joining prefix-against-prefix on the gram is therefore
-    LOSSLESS for the threshold, at candidate volume ~ sum of squared
-    prefix-posting lengths instead of |values|^2.  df-ascending ordering
-    puts the RAREST grams in prefixes, which is exactly the posting-volume
-    minimizer.
-3.  Candidates pass the length filter (| |a|-|b| | <= d, necessary) and
-    the exact ``levenshtein(a, b) <= d`` verify — both JVM built-ins.
+1.  Partition each string into d+1 SEGMENTS.  Pigeonhole: d edits leave
+    at least one segment untouched, and an untouched segment appears
+    verbatim in the partner, displaced by at most d.  The equi-join key
+    is the full segment (length ~ l/(d+1) chars) plus the partner length
+    and the segment index, so probe fan-out is bounded at
+    (d+1) target lengths x (d+1) segments x (2d+1) positions per string.
+2.  Candidates pass the exact ``levenshtein(a, b) <= d`` verify (a JVM
+    built-in).
 
-Short-string channel: the prefix argument needs a COMMON gram to exist,
-but a string with <= q*d padded grams (length <= q*(d-1)+1) can have its
-entire gram set destroyed by d edits — "a" vs "b" at d=1 share nothing.
-Such DEFICIENT strings are additionally paired through a length-key
-equi-join (each deficient string fans out to its 2d+1 admissible partner
-lengths; partners are themselves length-bounded by q*(d-1)+1+d, so both
-sides of this channel are the bounded short-vocabulary slice — no cross
-join, no hot key).  Union of the two channels is lossless for ALL inputs.
+Short-string channel: a string of length <= d has empty segments, so such
+strings pair through a length-key equi-join instead (each fans out to its
+2d+1 admissible partner lengths; both sides of the channel are the
+bounded short-vocabulary slice — no cross join, no hot key).  The union
+of the two channels is lossless for ALL inputs.
 
-MEASURED LIMIT of the q-gram method, and the PassJoin default: q-gram
-signatures saturate on low-character-diversity vocabularies.  On an
-adversarial probe (strings drawn from a 200-word vocabulary plus a
-numeric suffix — only ~10^3-10^4 distinct grams no matter how many
-strings), candidate volume grew SUPER-linearly: 330 -> 1183 -> 2852
-candidates/string as n went 10k -> 40k -> 100k at q=3 (n^2/|gram types|
-— the signature space, not the data, is the bottleneck; candidate
-generation hit 232 s at n=100k).  The fix is the published
-partition-based scheme — PassJoin (Li, Deng & Feng, ICDE'11): partition
-each string into d+1 SEGMENTS (pigeonhole: d edits leave >= 1 segment
-untouched, and an untouched segment appears verbatim in the partner
-displaced by at most d); the equi-join key is the full segment
-(length ~ l/(d+1) chars, vastly more selective than any q-gram) plus
-the partner length and segment index.  Probe fan-out is bounded:
-<= (d+1) target lengths x (d+1) segments x (2d+1) positions per string.
-``method="passjoin"`` is the default; ``method="qgram"`` remains for
-high-diversity vocabularies where gram prefixes are smaller than
-segment probes.  Same probe with PassJoin (the honest metric is
-candidates per TRUE pair, because that synthetic vocabulary's ids
-collide mod 200 and the OUTPUT itself is quadratic): n=10k -> 244k
-candidates / 167k true pairs (1.5x), n=40k -> 4.0M / 1.7M (2.3x),
-n=100k -> 24.9M / 6.9M (3.6x) in 130 s — versus the q-gram method's
-62x at n=10k and non-termination at n=100k/q=2.  Candidate volume
-tracks output volume, not n^2.  Numbers in docs/BENCH_NOTES.md
-round-12 section; completeness pinned for both methods in
-tests/test_editdist.py.
+Candidate volume tracks output volume, not n^2: on an adversarial
+low-diversity vocabulary PassJoin produced 1.5-3.6x candidates per true
+pair up to n=100k.  The ED-Join q-gram prefix filter it replaced
+saturated on the same probe (62x at n=10k, no finish at n=100k) and was
+retired; numbers in docs/BENCH_NOTES.md, "Round 12: q-gram blocking
+falsified at scale, replaced by PassJoin".
 
 Scale design (100 TB posture):
 - The join runs over DISTINCT string VALUES, not rows: callers aggregate
   to (value, count) first, so pair work scales with vocabulary size, and
   row-level multiplicity is joined back as counts afterwards.
-- Everything is DataFrame built-ins: one groupBy for gram df, one bounded
-  window (frame = a string's own gram count, ~len chars) for prefix rank,
-  one equi-join on the gram for candidates, one hash join back to verify.
-  No UDF, no cross join, no driver collect.
-- Hot grams are self-limiting: a gram leads a prefix only when it is among
-  that string's q*d+1 RAREST grams, so high-df grams drop out of prefixes
-  on exactly the strings that have rarer evidence to offer.  The residual
-  worst case (a near-duplicate-saturated vocabulary) has quadratic OUTPUT,
-  which no candidate scheme can beat.
+- Everything is DataFrame built-ins: one explode per side for segments
+  and probe substrings, one equi-join on (length, index, segment) for
+  candidates, one distinct, one verify projection.  No UDF, no cross
+  join, no driver collect.
+- The residual worst case (a near-duplicate-saturated vocabulary) has
+  quadratic OUTPUT, which no candidate scheme can beat.
 
 Exactness: with no caps anywhere in this pipeline, the result equals the
 brute-force O(n^2) join — pinned by the DuckDB oracle of
@@ -85,94 +49,8 @@ tests/test_editdist.py's planted-perturbation completeness test.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-#: Sentinel padding characters (outside the data alphabet for the shipped
-#: callers; collisions with data merely add shared grams, never lose pairs).
-_PAD_L = "\x01"
-_PAD_R = "\x02"
-
-
-def qgrams_col(str_col: Column, q: int = 2) -> Column:
-    """Distinct positional-content q-grams of ``str_col`` padded with q-1
-    begin/end sentinels (array<string>, JVM HOF — no UDF).
-
-    Padding guarantees every non-empty string yields at least q grams and
-    makes single-character strings comparable at all.  The padded string is
-    LET-BOUND via ``transform(array(x), s -> ...)`` — HOF lambdas re-evaluate
-    outer expressions per element (no CSE), the repo-wide landmine.
-    """
-    padded = F.concat(F.lit(_PAD_L * (q - 1)), str_col, F.lit(_PAD_R * (q - 1)))
-
-    def body(s: Column) -> Column:
-        return F.transform(
-            F.sequence(F.lit(1), F.length(s) - (q - 1)),
-            lambda i: F.substring(s, i, q),
-        )
-
-    return F.array_distinct(F.element_at(F.transform(F.array(padded), body), 1))
-
-
-def editdist_candidates(
-    values: DataFrame,
-    str_col: str = "val",
-    max_dist: int = 2,
-    q: int = 2,
-) -> DataFrame:
-    """Candidate pairs ``(val_a, val_b)`` with ``val_a < val_b`` containing
-    EVERY pair within edit distance ``max_dist`` (prefix-filter theorem
-    above), pre-pruned by the length filter.
-
-    ``values`` must carry one row per distinct string in ``str_col``.
-    """
-    prefix_len = q * max_dist + 1
-    grams = values.select(
-        F.col(str_col).alias("_val"),
-        F.explode(qgrams_col(F.col(str_col), q)).alias("_g"),
-    )
-    dfreq = grams.groupBy("_g").agg(F.count(F.lit(1)).alias("_df"))
-    w = Window.partitionBy("_val").orderBy(F.col("_df").asc(), F.col("_g").asc())
-    prefix = (
-        grams.join(dfreq, "_g")
-        .withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= prefix_len)
-        .select("_val", "_g")
-    )
-    a = prefix.select(F.col("_val").alias("val_a"), "_g")
-    b = prefix.select(F.col("_val").alias("val_b"), "_g")
-    gram_cand = (
-        a.join(b, "_g")
-        .filter(F.col("val_a") < F.col("val_b"))
-        .filter(
-            F.abs(F.length("val_a") - F.length("val_b")) <= max_dist
-        )
-        .select("val_a", "val_b")
-    )
-    # Deficient-length channel (module docstring): strings short enough for
-    # d edits to destroy every padded gram pair through a length-key
-    # equi-join instead.  Both sides are bounded-short slices.
-    short_max = q * (max_dist - 1) + 1
-    s = values.filter(F.length(str_col) <= short_max).select(
-        F.col(str_col).alias("_vs"),
-        F.explode(
-            F.sequence(
-                F.length(str_col) - max_dist, F.length(str_col) + max_dist
-            )
-        ).alias("_len"),
-    )
-    t = values.filter(F.length(str_col) <= short_max + max_dist).select(
-        F.col(str_col).alias("_vt"), F.length(str_col).alias("_len")
-    )
-    short_cand = (
-        s.join(t, "_len")
-        .filter(F.col("_vs") != F.col("_vt"))
-        .select(
-            F.least("_vs", "_vt").alias("val_a"),
-            F.greatest("_vs", "_vt").alias("val_b"),
-        )
-    )
-    return gram_cand.unionByName(short_cand).distinct()
 
 
 def _segment_bounds(length: Column, k: int, i: int) -> tuple[Column, Column]:
@@ -233,7 +111,7 @@ def _passjoin_probe(values: DataFrame, str_col: str, d: int) -> DataFrame:
     (r15 measured-and-rejected: memoizing the parsed Column per session
     saved nothing — a warm re-parse is ~30 ms; the residual 0.3 s/build is
     the surrounding DataFrame-DSL Py4J calls, which are not memoizable.
-    Numbers in OPTIMIZATION_r15.md.)"""
+    The measurement is recorded in the message of commit ac8760b.)"""
     k = d + 1
     c = f"`{str_col}`"
     L = f"length({c})"
@@ -338,7 +216,7 @@ def passjoin_candidates(
     signatures saturate (index/probe builders above).
 
     Pairs whose shorter side has length <= d (segments would be empty) go
-    through the same bounded length-key channel as the q-gram method.
+    through the bounded length-key channel (module docstring).
     """
     d = max_dist
     seg_cand = _seg_join(
@@ -407,28 +285,14 @@ def editdist_pairs(
     values: DataFrame,
     str_col: str = "val",
     max_dist: int = 2,
-    q: int = 2,
-    method: str = "passjoin",
 ) -> DataFrame:
     """All distinct-value pairs within edit distance ``max_dist``:
-    ``(val_a, val_b, dist)`` with ``val_a < val_b`` — blocked candidates,
-    then exact ``levenshtein`` verify (both JVM-side).
-
-    ``method="passjoin"`` (default) uses partition-segment blocking —
-    candidate volume stays data-bounded even on low-character-diversity
-    vocabularies where q-gram signatures saturate (measured in the module
-    docstring).  ``method="qgram"`` uses the ED-Join prefix filter —
-    slightly cheaper probes when gram diversity is high.  Both are
-    LOSSLESS: result equals the brute-force quadratic join (pinned by the
-    DuckDB oracle of ``dedup_editdist_blocked`` and the parameterized
-    completeness tests).
+    ``(val_a, val_b, dist)`` with ``val_a < val_b`` — PassJoin candidates,
+    then exact ``levenshtein`` verify (both JVM-side).  LOSSLESS: the
+    result equals the brute-force quadratic join (pinned by the DuckDB
+    oracle of ``dedup_editdist_blocked`` and the completeness tests).
     """
-    if method == "passjoin":
-        cand = passjoin_candidates(values, str_col, max_dist)
-    elif method == "qgram":
-        cand = editdist_candidates(values, str_col, max_dist, q)
-    else:
-        raise ValueError(f"unknown editdist method: {method!r}")
+    cand = passjoin_candidates(values, str_col, max_dist)
     return (
         cand.withColumn("dist", F.levenshtein("val_a", "val_b"))
         .filter(F.col("dist") <= max_dist)

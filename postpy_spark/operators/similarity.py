@@ -1,9 +1,12 @@
 """Similarity search over embedding columns (SURVEY.md §2.D).
 
 Brute-force cosine top-k as the exact baseline, and a random-hyperplane
-LSH-bucketed approximate path for scale.  All vector math is JVM-side
-higher-order functions (``zip_with`` + ``aggregate``) — no Python UDF in
-any hot path.
+LSH-bucketed approximate path for scale.  Per-pair cosine math is JVM-side
+higher-order functions (``zip_with`` + ``aggregate``).  Three batch stages
+run as ``mapInArrow`` workers instead — the kNN-graph pair dot, the LSH
+signatures and the IVF centroid argmax — each a dimension-order left fold
+that is bit-identical to the JVM fold, decoding its list column through
+:mod:`.arrow_lists`.
 
 Scale design: brute force is a broadcast-nested-loop against a SMALL query
 set (queries broadcast, corpus streamed — linear in corpus size); the LSH
@@ -18,6 +21,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.types import LongType, StructField, StructType
+
+from .arrow_lists import make_list_decoder
 
 
 def dot_expr(a, b):
@@ -74,6 +79,7 @@ def _make_pair_dot_worker():
     tests/test_similarity.py).  A plain ``np.einsum``/``np.dot`` would use
     pairwise/blocked summation whose different association can flip
     6-dp-rounding ties — the repo's cross-engine float landmine."""
+    _, matrix = make_list_decoder()
 
     def dot_batches(it):
         import numpy as np
@@ -82,22 +88,16 @@ def _make_pair_dot_worker():
         for batch in it:
             n = batch.num_rows
             src, dst = batch.column("src"), batch.column("dst")
-            sv, dv = batch.column("sv"), batch.column("dv")
             if n == 0:
                 yield pa.RecordBatch.from_arrays(
                     [src, dst, pa.array([], type=pa.float64())],
                     ["src", "dst", "dot"],
                 )
                 continue
-            if sv.null_count or dv.null_count:
-                # inner joins against the vector frame guarantee non-null
-                # payloads; raise loudly rather than silently misalign the
-                # flattened buffer
-                raise ValueError("pair-dot scorer received a null vector")
-            # list<double> -> flat buffer -> (n, d); zero-copy when offsets
-            # are contiguous.  reshape raises on ragged rows (dim guard).
-            x = sv.flatten().to_numpy(zero_copy_only=False).reshape(n, -1)
-            y = dv.flatten().to_numpy(zero_copy_only=False).reshape(n, -1)
+            x = matrix(batch.column("sv"), "pair-dot scorer")
+            y = matrix(batch.column("dv"), "pair-dot scorer")
+            if x.shape != y.shape:
+                raise ValueError("pair-dot scorer received vectors of different lengths")
             acc = np.zeros(n, dtype=np.float64)
             for j in range(x.shape[1]):
                 acc += x[:, j] * y[:, j]
@@ -236,30 +236,13 @@ def _hyperplanes(dim: int, n_bits: int, seed: int) -> list[list[float]]:
     return rng.standard_normal((n_bits, dim)).tolist()
 
 
-def lsh_signature_col(vec_col, planes: list[list[float]], bands: int):
-    """Array of ``bands`` band-bucket hashes from sign-of-projection bits."""
-    n_bits = len(planes)
-    width = n_bits // bands
-    bits = [
-        F.when(dot_expr(vec_col, F.array(*[F.lit(w) for w in plane])) >= 0, 1).otherwise(0)
-        for plane in planes
-    ]
-    band_vals = []
-    for b in range(bands):
-        v = F.lit(0)
-        for r in range(width):
-            v = v * 2 + bits[b * width + r]
-        band_vals.append(v)
-    return F.array(*band_vals)
-
-
 def _make_signature_worker(planes: list[list[float]], bands: int):
     """Factory for the Arrow LSH-signature worker (factory-nested so the
     payload cloudpickles by VALUE — the module-level-reference landmine in
     CLAUDE.md; pinned by tests/test_pickle_isolation.py).
 
     Emits ``bands`` rows (id, band_id, band_val) per input (id, v) row —
-    the posexploded shape of ``lsh_signature_col`` — with each of the
+    the posexploded shape of the Column-DSL sign-bit fold — with each of the
     ``n_bits`` projections computed as an EXPLICIT LEFT FOLD over
     dimensions in index order (``acc += x[:, j] * plane[:, j]``, one
     single-rounding IEEE multiply + add per step, vectorized across the
@@ -272,6 +255,7 @@ def _make_signature_worker(planes: list[list[float]], bands: int):
     DSL path exactly: band_id is the posexplode pos (int32), band_val the
     int32 bit fold — downstream ``xxhash64(id, band_id)`` salting hashes
     by type, so the widths must not drift."""
+    _, matrix = make_list_decoder()
 
     def sig_batches(it):
         import numpy as np
@@ -283,7 +267,6 @@ def _make_signature_worker(planes: list[list[float]], bands: int):
         for batch in it:
             n = batch.num_rows
             ids = batch.column(0)
-            vec = batch.column(1)
             if n == 0:
                 yield pa.RecordBatch.from_arrays(
                     [
@@ -294,9 +277,7 @@ def _make_signature_worker(planes: list[list[float]], bands: int):
                     [batch.schema.names[0], "band_id", "band_val"],
                 )
                 continue
-            if vec.null_count:
-                raise ValueError("signature worker received a null vector")
-            x = vec.flatten().to_numpy(zero_copy_only=False).reshape(n, -1)
+            x = matrix(batch.column(1), "signature worker")
             acc = np.zeros((n, n_bits), dtype=np.float64)
             for j in range(x.shape[1]):
                 # acc[:, i] += x[:, j] * p[i, j] — per (row, bit) this is the
@@ -330,10 +311,11 @@ def lsh_signatures_exploded(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(id, band_id, band_val) — one row per (vector, band): the
-    posexploded form of ``lsh_signature_col``, computed in ONE Arrow batch
-    pass (guide §4.2) instead of ``n_bits`` interpreted HOF dot folds per
-    row.  Bit-identical band values (see :func:`_make_signature_worker`)."""
+    """(id, band_id, band_val) — one row per (vector, band), computed in
+    ONE Arrow batch pass (guide §4.2) instead of ``n_bits`` interpreted HOF
+    dot folds per row.  Band values and types are bit-identical to the
+    Column-DSL sign-bit fold kept as the reference in
+    tests/test_llm_ops.py::test_arrow_signatures_identical_to_hof."""
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     sig_in = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
@@ -366,33 +348,30 @@ def ann_lsh_topk(
     force stays ≥0.9 on clustered data (asserted in tests).
     """
     planes = _hyperplanes(dim, n_bits, seed)
-    sig = lambda df, a, b: df.select(  # noqa: E731
-        F.col(id_col).alias(a),
-        F.col(vec_col).alias(b),
-        F.posexplode(lsh_signature_col(F.col(vec_col), planes, bands)).alias(
-            "band_id", "band_val"
-        ),
+    # Signatures carry ONLY ids (knn_graph's discipline): the bucket join
+    # and the cross-band pair dedup move id pairs, never d-float vectors,
+    # and each distinct pair is scored once after the vectors join back.
+    sig = lambda df, name: lsh_signatures_exploded(  # noqa: E731
+        df, planes, bands, id_col=id_col, vec_col=vec_col
+    ).select(F.col("id").alias(name), "band_id", "band_val")
+    pairs = (
+        sig(corpus, "cand_id")
+        .join(broadcast(sig(queries, "query_id")), ["band_id", "band_val"])
+        .filter(F.col("query_id") != F.col("cand_id"))
+        .select("query_id", "cand_id")
+        .dropDuplicates(["query_id", "cand_id"])
     )
-    q = sig(queries, "query_id", "qv")
-    c = sig(corpus, "cand_id", "cv")
-    cand = c.alias("c").join(
-        broadcast(q.alias("q")),
-        (F.col("q.band_id") == F.col("c.band_id"))
-        & (F.col("q.band_val") == F.col("c.band_val"))
-        & (F.col("query_id") != F.col("cand_id")),
+    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
+    c = corpus.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"))
+    scored = (
+        pairs.join(broadcast(q), "query_id")
+        .join(c, "cand_id")
+        .select(
+            "query_id",
+            "cand_id",
+            F.round(cosine_expr(F.col("qv"), F.col("cv")), 6).alias("cosine"),
+        )
     )
-    # Score BEFORE the cross-band dedup: cosine is deterministic per pair,
-    # so duplicates collapse identically and the dedup shuffle moves an
-    # 8-byte double instead of two d-float vectors (the broadcast-join
-    # output never shuffles, so re-scoring a pair that collided in several
-    # bands is narrow JVM math, not extra shuffle volume).
-    scored = cand.select(
-        "query_id",
-        "cand_id",
-        F.round(
-            cosine_expr(F.col("q.qv"), F.col("c.cv")), 6
-        ).alias("cosine"),
-    ).dropDuplicates(["query_id", "cand_id"])
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
@@ -411,7 +390,6 @@ def ivf_build(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    arrow: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Build an IVF index: (centroids, assignments).
 
@@ -425,17 +403,17 @@ def ivf_build(
     ``tests/test_plan_shapes.py``).  ``cell_id`` is the seed vector's own id,
     so no ranking step exists at all.
 
-    Each corpus vector is assigned to its max-cosine centroid via a
-    broadcast argmax.  Returns (centroids(cell_id, cv), corpus+cell_id).
-    At 100 TB the assignment is the only other full-corpus pass and it is a
-    narrow broadcast map — no shuffle.
+    Each corpus vector is assigned to its max-cosine centroid by the
+    Arrow argmax worker (:func:`_assign`).  Returns (centroids(cell_id,
+    cv), corpus+cell_id).  At 100 TB the assignment is the only other full-corpus pass and it is a
+    narrow map — no shuffle.
     """
     centroids = (
         corpus.select(F.col(id_col).alias("cell_id"), F.col(vec_col).alias("cv"))
         .orderBy(F.xxhash64(F.col("cell_id"), F.lit(seed)))
         .limit(n_cells)
     )
-    return centroids, _assign(corpus, centroids, id_col, vec_col, arrow=arrow)
+    return centroids, _assign(corpus, centroids, id_col, vec_col)
 
 
 def ivf_refine(
@@ -444,7 +422,6 @@ def ivf_refine(
     n_iter: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    arrow: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Lloyd refinement of an IVF coarse quantizer: new centroid = mean of
     the vectors assigned to the cell, then reassign.  All distributed:
@@ -453,7 +430,7 @@ def ivf_refine(
     never over corpus rows.  Each iteration is one corpus pass (broadcast
     argmax) plus one dimension-wise aggregate; k-means's monotone inertia
     descent applies.  Returns (centroids, assignments)."""
-    assigned = _assign(corpus, centroids, id_col, vec_col, arrow=arrow)
+    assigned = _assign(corpus, centroids, id_col, vec_col)
     for _ in range(n_iter):
         dims = assigned.select("cell_id", F.posexplode(F.col(vec_col)))
         means = dims.groupBy("cell_id", "pos").agg(F.avg("col").alias("m"))
@@ -467,14 +444,12 @@ def ivf_refine(
         # re-derives every earlier assignment pass (each a full-corpus
         # argmax) once per downstream consumer, so k refine iterations
         # cost O(k^2) corpus scans instead of O(k) (measured:
-        # refine_iters=2 ivf_topk 5.0s -> ~2.5s at sf0.1).  LAZY on the
-        # r14 Arrow-assignment path: _assign's unit-centroid collect is
-        # the materializing action, so each iteration is ONE job (the
-        # eager form spent a separate checkpoint job per iteration on the
-        # same n_cells x d frame).  The JVM path has no such collect, so
-        # it keeps the eager checkpoint.
-        centroids = centroids.localCheckpoint(eager=not arrow)
-        assigned = _assign(corpus, centroids, id_col, vec_col, arrow=arrow)
+        # refine_iters=2 ivf_topk 5.0s -> ~2.5s at sf0.1).  LAZY:
+        # _assign's unit-centroid collect is the materializing action, so
+        # each iteration is ONE job (the eager form spent a separate
+        # checkpoint job per iteration on the same n_cells x d frame).
+        centroids = centroids.localCheckpoint(eager=False)
+        assigned = _assign(corpus, centroids, id_col, vec_col)
     return centroids, assigned
 
 
@@ -493,6 +468,7 @@ def _make_assign_worker(cells: list[tuple[int, list[float]]]):
     then lowest cell_id).  Emits (id, vec, cell_id) passthrough rows —
     no exchange at all, where the BNLJ+max_by shape shuffled |corpus|
     rows per assignment pass."""
+    _, matrix = make_list_decoder()
 
     def assign_batches(it):
         import numpy as np
@@ -510,9 +486,7 @@ def _make_assign_worker(cells: list[tuple[int, list[float]]]):
                     [batch.schema.names[0], batch.schema.names[1], "cell_id"],
                 )
                 continue
-            if vec.null_count:
-                raise ValueError("assignment worker received a null vector")
-            x = vec.flatten().to_numpy(zero_copy_only=False).reshape(n, -1)
+            x = matrix(vec, "assignment worker")
             best_sim = None
             best_cell = np.empty(n, dtype=np.int64)
             for ci in range(C.shape[0]):
@@ -539,23 +513,9 @@ def _assign(
     centroids: DataFrame,
     id_col: str,
     vec_col: str,
-    arrow: bool = True,
 ) -> DataFrame:
     """Max-cosine argmax of each corpus vector over the centroids, as ONE
     Arrow batch pass (r14 optimization round 3, guide §4.2/§2.4).
-
-    ``arrow=False`` keeps the previous all-JVM shape — a broadcast
-    crossJoin of unit centroids scored with the interpreted ``dot_expr``
-    fold, argmaxed by a partial-aggregating ``max_by(cell_id,
-    struct(_sim, -cell_id))`` (the r12 fix that replaced the row_number
-    window; shuffle volume |corpus| rows).  Kept for MULTI-CONSUMER
-    pipelines (semantic_dedup): its final query references the assignment
-    from several branches plus broadcast-build jobs, and each branch
-    re-entering a Python stage (plus the collect/sequencing jobs the
-    Arrow path needs) measured +22–88% there, while the single-consumer
-    IVF/PQ/kmeans paths measured −6/−18/−33% with Arrow.  Outputs are
-    bit-identical either way (pinned by
-    tests/test_llm_ops.py::test_arrow_assignment_identical_to_maxby).
 
     Scored as a plain dot against UNIT centroids: argmax_c cos(v, c) =
     argmax_c dot(v, ĉ) because |v| is constant across the candidate cells.
@@ -564,8 +524,9 @@ def _assign(
     same class as the PQ codebooks / bloom bitmap / kmeans seeds), then
     shipped to the worker as a closure; dots are dimension-order left
     folds, so similarities — and the strictly-greater/ascending-cell
-    argmax tie-break — are bit-identical to the previous
-    BNLJ + ``max_by(cell_id, struct(_sim, -cell_id))`` shape (pinned by
+    argmax tie-break — are bit-identical to the retired all-JVM
+    BNLJ + ``max_by(cell_id, struct(_sim, -cell_id))`` shape (kept as the
+    reference in
     tests/test_llm_ops.py::test_arrow_assignment_identical_to_maxby).
 
     Scale: the old shape shuffled |corpus| rows through the max_by
@@ -573,25 +534,6 @@ def _assign(
     row_number window); the worker form is a NARROW passthrough — no
     exchange at all, and n_cells no longer multiplies per-row fold cost
     through the interpreted HOF evaluator."""
-    if not arrow:
-        cn = centroids.select("cell_id", unit_col(F.col("cv")).alias("_ucv"))
-        scored = corpus.crossJoin(broadcast(cn)).select(
-            F.col(id_col),
-            F.col(vec_col),
-            "cell_id",
-            dot_expr(F.col(vec_col), F.col("_ucv")).alias("_sim"),
-        )
-        return (
-            scored.groupBy(id_col)
-            .agg(
-                F.first(vec_col).alias(vec_col),
-                F.max_by(
-                    "cell_id",
-                    F.struct(F.col("_sim"), (-F.col("cell_id")).alias("_nc")),
-                ).alias("cell_id"),
-            )
-            .select(id_col, vec_col, "cell_id")
-        )
     cells = [
         (int(r["cell_id"]), [float(x) for x in r["_ucv"]])
         for r in centroids.select(
@@ -706,25 +648,10 @@ def semantic_dedup(
         # planted-dense-cluster pathology.  16 floor keeps tiny corpora on
         # the historical golden-fixture path.
         n_cells = max(16, min(4096, corpus.count() // 512))
-    # arrow=False (r14 optimization round 3, measured): semantic_dedup's
-    # final query references the assignment from SEVERAL branches (both
-    # self-join sides + the final left join) plus broadcast-build jobs.
-    # The Arrow assignment is faster in isolation (0.53 vs 0.93 s warm),
-    # but here each branch re-entered a Python stage where the all-JVM
-    # subtree was cheap to recompute concurrently, the narrow worker
-    # inherited the scan's single-file partitioning (the within-cell
-    # cosine stage collapsed onto ONE task — pair join alone 4.5 s vs
-    # 1.5 s under the max_by output's hash partitioning), and the collect
-    # /checkpoint sequencing jobs added ~3 job floors.  Every repair
-    # combination still measured +22–88% interleaved, so this
-    # multi-consumer pipeline keeps the JVM max_by shape; the
-    # single-consumer IVF/PQ/kmeans paths keep Arrow (−6/−18/−33%).
-    centroids, assigned = ivf_build(
-        corpus, n_cells, id_col, vec_col, seed, arrow=True
-    )
+    centroids, assigned = ivf_build(corpus, n_cells, id_col, vec_col, seed)
     if refine_iters:
         centroids, assigned = ivf_refine(
-            corpus, centroids, refine_iters, id_col, vec_col, arrow=True
+            corpus, centroids, refine_iters, id_col, vec_col
         )
     # The narrow Arrow worker inherits the SCAN's partitioning (often one
     # file = one task at bench scale), which in r14 collapsed the

@@ -3320,9 +3320,10 @@ def sim_ann_planted_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     2-bit buckets) can never out-rank or tie a true neighbor at k=5 with
     ≥29 members per group at every sf tier.
 
-    Scale: identical plan to the production path — queries broadcast, the
-    corpus is signature-bucketed once, candidates flow through the
-    score-before-dedup shuffle slimming (8-byte doubles, never vectors)."""
+    Scale: identical plan to the production path — the corpus is
+    signature-bucketed once, query signatures broadcast, and candidate
+    id pairs are deduped before the vectors join back for one cosine
+    per pair."""
     from postpy_spark.operators import similarity
 
     o = load_table(spark, sf_dir, "orders")

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from postpy_spark.operators.editdist import editdist_pairs, qgrams_col
+from postpy_spark.operators.editdist import editdist_pairs
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -44,15 +44,16 @@ def _brute(spark, strings, d):
     return out
 
 
-def _blocked(spark, strings, d, q=2, method="passjoin"):
+def _blocked(spark, strings, d):
     df = spark.createDataFrame([Row(val=s) for s in strings])
     return {
         (r.val_a, r.val_b, r.dist)
-        for r in editdist_pairs(df, "val", max_dist=d, q=q, method=method).collect()
+        for r in editdist_pairs(df, "val", max_dist=d).collect()
     }
 
 
-METHODS = ["passjoin", "qgram"]
+# PassJoin is the only blocker; the parameter keeps each case's test id.
+METHODS = ["passjoin"]
 
 
 @pytest.mark.parametrize("method", METHODS)
@@ -67,7 +68,7 @@ def test_completeness_vs_bruteforce_on_part_names(spark, method):
         .collect()
     ]
     assert len(names) > 30
-    assert _blocked(spark, names, 3, method=method) == _brute(spark, names, 3)
+    assert _blocked(spark, names, 3) == _brute(spark, names, 3)
 
 
 @pytest.mark.parametrize("method", METHODS)
@@ -94,7 +95,7 @@ def test_planted_perturbations_all_found(spark, method):
         if edited != s:
             planted.append((s, edited))
     strings = sorted({s for p in planted for s in p})
-    got = {(a, b) for a, b, _ in _blocked(spark, strings, 2, method=method)}
+    got = {(a, b) for a, b, _ in _blocked(spark, strings, 2)}
     for s, e in planted:
         lo, hi = min(s, e), max(s, e)
         assert (lo, hi) in got, (s, e)
@@ -102,12 +103,11 @@ def test_planted_perturbations_all_found(spark, method):
 
 @pytest.mark.parametrize("method", METHODS)
 def test_short_string_channel(spark, method):
-    """Strings too short for the signature argument ("a" vs "b" share ZERO
-    padded 2-grams; PassJoin segments would be empty) still pair through
-    the length-key channel."""
+    """Strings too short for the segment argument (PassJoin segments would
+    be empty) still pair through the length-key channel."""
     strings = ["a", "b", "ab", "ba", "xy", ""]
-    assert _blocked(spark, strings, 1, method=method) == _brute(spark, strings, 1)
-    assert _blocked(spark, strings, 2, method=method) == _brute(spark, strings, 2)
+    assert _blocked(spark, strings, 1) == _brute(spark, strings, 1)
+    assert _blocked(spark, strings, 2) == _brute(spark, strings, 2)
 
 
 @pytest.mark.parametrize("method", METHODS)
@@ -115,17 +115,7 @@ def test_mixed_short_and_long(spark, method):
     """Deficient-length and signature-bearing strings coexist: pairs inside
     each regime and across the length boundary are all present."""
     strings = ["ab", "abc", "abcd", "abcde", "zzzzz", "abzde"]
-    assert _blocked(spark, strings, 2, method=method) == _brute(spark, strings, 2)
-
-
-def test_qgrams_padding_yields_grams_for_tiny_strings(spark):
-    df = spark.createDataFrame([Row(val="a"), Row(val="")])
-    out = {
-        r.val: r.g
-        for r in df.select("val", qgrams_col(F.col("val"), 2).alias("g")).collect()
-    }
-    assert len(out["a"]) == 2  # <pad>a, a<pad>
-    assert len(out[""]) == 1  # <padL><padR>
+    assert _blocked(spark, strings, 2) == _brute(spark, strings, 2)
 
 
 def test_distance_values_exact(spark):
@@ -148,7 +138,7 @@ def test_passjoin_insert_delete_shifts(spark):
         "abcdeYfghij",   # 1 insertion mid-string
         "bcdefghij",     # 1 deletion at the front
     ]
-    assert _blocked(spark, strings, 2, method="passjoin") == _brute(
+    assert _blocked(spark, strings, 2) == _brute(
         spark, strings, 2
     )
 
@@ -157,7 +147,7 @@ def test_passjoin_equal_length_substitutions(spark):
     """Equal-length pairs double-emit (each side probes the other) — the
     least/greatest fold plus distinct must leave exactly one row."""
     strings = ["matchbox", "watchbox", "matchbod", "catchbox"]
-    got = _blocked(spark, strings, 2, method="passjoin")
+    got = _blocked(spark, strings, 2)
     exp = _brute(spark, strings, 2)
     assert got == exp
     # and no duplicates survived the fold
@@ -174,7 +164,7 @@ def test_passjoin_segment_formula_consistency(spark):
         s = "".join(chr(ord("a") + (i * 7 + n) % 26) for i in range(n))
         strings.append(s)
         strings.append(s[: n // 2] + "Z" + s[n // 2 + 1 :])  # 1 substitution
-    assert _blocked(spark, strings, 1, method="passjoin") == _brute(
+    assert _blocked(spark, strings, 1) == _brute(
         spark, strings, 1
     )
 

@@ -6,9 +6,9 @@ grammar to the operator classes where round 12's bugs actually lived:
 - **Edit-distance predicate** (operators/editdist.py): random vocabularies
   built from base strings plus insert/delete/substitute perturbations at
   d ∈ {1,2,3}, over BOTH high-diversity and degenerate (2-letter)
-  alphabets — the degenerate regime is where q-gram signatures saturate
-  and where PassJoin's deficiency threshold must hold.  Both blocking
-  methods are asserted EXACTLY equal to a DuckDB brute-force quadratic
+  alphabets — the degenerate regime is where gram signatures saturate
+  and where PassJoin's short-string threshold must hold.  The blocked
+  join is asserted EXACTLY equal to a DuckDB brute-force quadratic
   levenshtein join (the same compare the dedup_editdist_blocked oracle
   runs, but over adversarial synthetic vocabularies including empty
   strings and duplicates-after-perturbation).
@@ -104,19 +104,17 @@ def _vocab_oracle(vocab: list[str], d: int):
     return con, sql
 
 
-@given(spec=editdist_vocab(), method=st.sampled_from(["passjoin", "qgram"]))
+@given(spec=editdist_vocab())
 @CFG
-def test_fuzz_editdist_blocking_lossless(spark, spec, method):
-    """Both blocking methods must equal the brute-force quadratic join on
-    any vocabulary — losslessness is the operator's whole contract."""
+def test_fuzz_editdist_blocking_lossless(spark, spec):
+    """PassJoin blocking must equal the brute-force quadratic join on any
+    vocabulary — losslessness is the operator's whole contract."""
     vocab, d = spec
     df = spark.createDataFrame([(v,) for v in vocab], "val STRING")
-    pairs = editdist.editdist_pairs(df, "val", max_dist=d, method=method)
+    pairs = editdist.editdist_pairs(df, "val", max_dist=d)
     con, sql = _vocab_oracle(vocab, d)
     problems = compare_spark_duckdb(pairs, con, sql)
-    assert not problems, (
-        f"{problems}\nmethod={method} d={d} vocab={vocab!r}"
-    )
+    assert not problems, f"{problems}\nd={d} vocab={vocab!r}"
 
 
 @st.composite

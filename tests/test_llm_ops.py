@@ -1474,16 +1474,32 @@ def test_arrow_signatures_identical_to_hof(spark):
     change the xxhash64 bucket salting downstream)."""
     from postpy_spark.operators.similarity import (
         _hyperplanes,
-        lsh_signature_col,
+        dot_expr,
         lsh_signatures_exploded,
     )
+
+    def signature_col(vec, planes, bands):
+        # reference: the Column-DSL sign-bit fold the worker replaced —
+        # one dot_expr per hyperplane, bits folded MSB-first per band
+        width = len(planes) // bands
+        bits = [
+            F.when(dot_expr(vec, F.array(*[F.lit(w) for w in p])) >= 0, 1).otherwise(0)
+            for p in planes
+        ]
+        band_vals = []
+        for b in range(bands):
+            v = F.lit(0)
+            for r in range(width):
+                v = v * 2 + bits[b * width + r]
+            band_vals.append(v)
+        return F.array(*band_vals)
 
     em = load_table(spark, SF_SMOKE, "embeddings")
     planes = _hyperplanes(64, 16, 42)
     arrow = lsh_signatures_exploded(em, planes, 8)
     hof = em.select(
         F.col("vec_id").alias("id"),
-        F.posexplode(lsh_signature_col(F.col("embedding"), planes, 8)).alias(
+        F.posexplode(signature_col(F.col("embedding"), planes, 8)).alias(
             "band_id", "band_val"
         ),
     )
