@@ -18,9 +18,9 @@ counts.  Per round:
 
 State is the (word, syms, cnt) frame; each round's frame is persisted and
 the previous round's evicted, with ``localCheckpoint`` every
-``checkpoint_every`` rounds to truncate lineage (the PageRank/LPA loop
-pattern, operators/graph.py).  Words carry the classic ``</w>``
-end-of-word marker so merges distinguish suffixes from mid-word units.
+``CHECKPOINT_EVERY`` rounds to truncate lineage.  Words carry the classic
+``</w>`` end-of-word marker so merges distinguish suffixes from mid-word
+units.
 """
 
 from __future__ import annotations
@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 END_OF_WORD = "</w>"
+CHECKPOINT_EVERY = 4
 
 
 # The per-round expressions below are generated as ONE SQL string handed to
@@ -117,7 +118,6 @@ def bpe_train(
     n_merges: int = 12,
     word_col: str = "w",
     count_col: str = "cnt",
-    checkpoint_every: int = 4,
     return_vocab: bool = False,
 ):
     """Learn ``n_merges`` BPE merges from a (word, count) vocabulary frame.
@@ -170,7 +170,7 @@ def bpe_train(
                 .alias("syms"),
                 "cnt",
             )
-            if rank % checkpoint_every == 0:
+            if rank % CHECKPOINT_EVERY == 0:
                 new_vocab = new_vocab.localCheckpoint(eager=False)
             new_vocab = new_vocab.persist()
             old, vocab = vocab, new_vocab

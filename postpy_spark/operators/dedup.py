@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .arrow_lists import make_list_decoder
+from .fixpoint import fixpoint, release
 
 # ---------------------------------------------------------------------------
 # Cache hygiene
@@ -421,7 +422,6 @@ def connected_components(
     id_b: str = "id_b",
     max_iterations: int = 20,
     pairs_unique: bool = False,
-    steps_per_job: int = 1,
 ) -> DataFrame:
     """Min-label propagation WITH pointer doubling over an undirected pair
     list → (node, component) with component = min node id in the component.
@@ -449,36 +449,13 @@ def connected_components(
     duplicate-insensitive, so labels are identical either way; duplicated
     input pairs just inflate every iteration's message join.
 
-    ``steps_per_job`` (r15, guide §2.4/§1.2): fuse N propagation+doubling
-    steps into one lazily-checkpointed plan, cutting the loop's SEQUENTIAL
-    JOB count (one driver-synchronized checkpoint+count per block instead
-    of per step).  Convergence is detected from the LAST fused step's
-    change flag, which is sound because one step is a deterministic
-    monotone function f of the labels — f(labels) == labels means fixpoint
-    regardless of what earlier fused steps changed.  Labels at the fixpoint
-    are identical to the per-step form (pinned by
-    tests/test_llm_ops.py::test_cc_fused_steps_identical + every CC
-    consumer's oracle).
-
-    Default 1 — fusion was MEASURED NEUTRAL at bench scale for the
-    general callers (r15 interleaved A/B, 5 pairs: graph_connected_
-    components −2.6%, er_canonical_entities +9.7% min / −7.4% median —
-    noise band): within a fused plan the first step's subtree feeds ~3
-    branches of the second with fresh expression ids, the executed plans
-    show NO ReusedExchange, and the recomputed node-sized fragments offset
-    the saved job floor.  Callers whose loop runs on a BOUNDED graph where
-    the synchronization round-trip IS the cost (er_merge_incremental's
-    contracted batch-sized loop: 2 rounds → 1 job) opt in explicitly; the
-    duplicated compute there is bounded by the batch, never the corpus.
-    At most one extra step of work runs past convergence when the
-    changing-depth is even.
+    The loop, its checkpoint cadence and the release of its checkpoints
+    live in :func:`postpy_spark.operators.fixpoint.fixpoint`.
     """
     if max_iterations < 1:
         # with no iterations the loop body never runs and the identity
         # labeling below would be returned as silently-wrong output
         raise ValueError(f"max_iterations must be >= 1, got {max_iterations}")
-    if steps_per_job < 1:
-        raise ValueError(f"steps_per_job must be >= 1, got {steps_per_job}")
     edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).unionByName(
         pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
     )
@@ -491,7 +468,7 @@ def connected_components(
     # spends per-iteration on labels.
     edges = edges.localCheckpoint()
 
-    def step(labels: DataFrame | None) -> DataFrame:
+    def step(labels: DataFrame | None, _i: int) -> DataFrame:
         """One propagation+doubling step: (node, component, _chg)."""
         if labels is None:
             # FIRST iteration specialized (r14 optimization round 3): the
@@ -553,26 +530,8 @@ def connected_components(
             (final_c < F.col("_old")).alias("_chg"),
         )
 
-    labels = None
-    changed = 0
-    done = 0
-    while done < max_iterations:
-        frame = step(labels)
-        for _ in range(min(steps_per_job, max_iterations - done) - 1):
-            # fuse further steps into the SAME plan; only the last step's
-            # _chg survives to the convergence count (soundness argument in
-            # the docstring: a step that changes nothing proves the fixpoint
-            # no matter what the fused steps before it did).
-            frame = step(frame.select("node", "component"))
-        done += min(steps_per_job, max_iterations - done)
-        # lazy checkpoint: the changed-count below is the materializing
-        # action, so each fused block is ONE job (previously one job PER
-        # iteration, and before r14 two).
-        new_labels = frame.localCheckpoint(eager=False)
-        changed = new_labels.filter(F.col("_chg")).count()
-        labels = new_labels.select("node", "component")
-        if changed == 0:
-            break
+    labels, changed = fixpoint(step, None, max_iterations)
+    release(edges)
     if changed != 0:
         raise RuntimeError(
             f"connected_components did not converge in {max_iterations} "

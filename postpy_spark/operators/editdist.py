@@ -371,16 +371,9 @@ def er_merge_incremental(
         )
         .filter(F.col("ra") != F.col("rb"))
     )
-    # steps_per_job=2 (r15): the contracted graph is batch-sized and its
-    # loop is 1-2 changing rounds + 1 confirm — the driver-synchronized
-    # checkpoint+count round-trips ARE its cost.  Fusing two steps per job
-    # converges the typical daily batch in ONE job instead of two+, and
-    # the duplicated in-plan step-1 fragments are bounded by the batch
-    # (see connected_components' docstring for the measured general-case
-    # neutrality that keeps the default at 1).
-    comps = connected_components(
-        e, "ra", "rb", max_iterations=max_iter, steps_per_job=2
-    )
+    # the contracted graph is batch-sized; the loop's checkpoint cadence
+    # is operators/fixpoint.py's
+    comps = connected_components(e, "ra", "rb", max_iterations=max_iter)
     # new strings: component of their own node, else themselves
     new_rows = (
         new_values.select(F.col(str_col).alias("name"))

@@ -3,8 +3,9 @@
 PageRank as pure DataFrame iterations — the second iterative-algorithm
 class next to connected components (operators/dedup.py): per-iteration a
 rank-contribution shuffle keyed on the edge source and one aggregate keyed
-on the destination, ``localCheckpoint`` every few rounds to truncate the
-lineage (same discipline as the CC loop).
+on the destination.  Every loop here runs through the shared driver in
+operators/fixpoint.py, which owns the checkpoint cadence, the convergence
+count and the release of its checkpoints (as the CC loop does).
 
 The pipeline use here is CANONICAL-DOCUMENT SELECTION: within a near-dup
 cluster, the survivor should be the most central duplicate (the template
@@ -19,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .fixpoint import fixpoint
+
 
 def pagerank(
     pairs: DataFrame,
@@ -26,7 +29,6 @@ def pagerank(
     id_b: str = "id_b",
     n_iter: int = 10,
     beta: float = 0.85,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """(node, rank) over the undirected graph given as a pair list.
 
@@ -39,8 +41,7 @@ def pagerank(
     Scale: each iteration is ONE join of ranks to edges (shuffle on src —
     reusable partitioning round over round) and one groupBy(dst) aggregate;
     state is a (node, rank) frame, never adjacency materialization beyond
-    the input edges.  ``localCheckpoint`` every ``checkpoint_every`` rounds
-    keeps the plan from growing linearly with iterations.
+    the input edges.  The lineage is truncated by the fixpoint driver.
     """
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
@@ -53,22 +54,22 @@ def pagerank(
     # cache the (small relative to corpus) edge+degree frame: reused n_iter times
     withdeg = edges.join(out_deg, "src").persist()
     ranks = out_deg.select(F.col("src").alias("node"), F.lit(1.0).alias("rank"))
-    for i in range(n_iter):
+
+    def step(ranks: DataFrame, _i: int) -> DataFrame:
         contribs = (
             withdeg.join(ranks, withdeg.src == ranks.node)
             .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
             .groupBy("dst")
             .agg(F.sum("c").alias("in_sum"))
         )
-        ranks = contribs.select(
+        return contribs.select(
             F.col("dst").alias("node"),
             (F.lit(1.0 - beta) + F.lit(beta) * F.col("in_sum")).alias("rank"),
         )
-        if (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=False)
-    # Materialize before unpersisting so the cached edge+degree frame
-    # actually serves the n_iter joins (same reasoning as pagerank_exact).
-    ranks = ranks.localCheckpoint(eager=True)
+
+    # the driver returns a materialized frame, so the cache has served
+    # every iteration's join before it is dropped
+    ranks, _ = fixpoint(step, ranks, n_iter)
     withdeg.unpersist()
     return ranks
 
@@ -77,7 +78,6 @@ def pagerank_exact(
     edges: DataFrame,
     n_iter: int = 4,
     deg_lcm: int = 12,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """(node, rank_scaled BIGINT): damped PageRank (β = 17/20) computed in
     EXACT integer-rational arithmetic — the cross-engine-attestable twin of
@@ -106,7 +106,7 @@ def pagerank_exact(
     Scale: identical plan shape to :func:`pagerank` — per iteration ONE
     join of the (node, a) state to the weighted edge list (shuffle keyed on
     src, reusable round over round) + one groupBy(dst) aggregate + one left
-    join back to the node set; lineage truncated via localCheckpoint."""
+    join back to the node set; lineage truncated by the fixpoint driver."""
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
@@ -130,7 +130,8 @@ def pagerank_exact(
         .persist()
     )
     a = nodes.select("node", F.lit(1).cast("bigint").alias("a"))
-    for t in range(n_iter):
+
+    def step(a: DataFrame, t: int) -> DataFrame:
         const = 3 * (20**t) * (deg_lcm ** (t + 1))
         contrib = (
             we.join(a, we.src == a.node)
@@ -138,20 +139,17 @@ def pagerank_exact(
             .groupBy("dst")
             .agg(F.sum("c").alias("s"))
         )
-        a = nodes.join(contrib, nodes.node == contrib.dst, "left").select(
+        return nodes.join(contrib, nodes.node == contrib.dst, "left").select(
             "node",
             (
                 F.lit(const).cast("bigint")
                 + F.lit(17).cast("bigint") * F.coalesce(F.col("s"), F.lit(0))
             ).alias("a"),
         )
-        if (t + 1) % checkpoint_every == 0:
-            a = a.localCheckpoint(eager=False)
-    # Materialize BEFORE dropping the caches: the return is lazy, so an
-    # eager=False checkpoint + immediate unpersist would evict `we`/`nodes`
-    # before any action runs them — every iteration join would then
-    # recompute the edges scan at the caller's first action (r10 advice).
-    a = a.localCheckpoint(eager=True)
+
+    # the driver returns a materialized frame: dropping the caches any
+    # earlier would make every iteration join recompute the edges scan
+    a, _ = fixpoint(step, a, n_iter)
     we.unpersist()
     nodes.unpersist()
     return a.select("node", F.col("a").alias("rank_scaled"))
@@ -189,7 +187,6 @@ def label_propagation(
     id_a: str = "id_a",
     id_b: str = "id_b",
     n_iter: int = 15,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """(node, label) communities by synchronous label propagation
     (Raghavan et al. 2007) with a SELF-VOTE and deterministic
@@ -201,49 +198,42 @@ def label_propagation(
 
     Scale: per iteration ONE labels-to-edges join (shuffle keyed on the
     edge source, same partitioning every round) + one degree-bounded
-    vote window per node; state is a (node, label) frame.  Iterations
-    stop early via an aggregate-only changed-count check; the plan is
-    truncated with localCheckpoint like the PageRank/CC loops.
-
-    ``checkpoint_every`` defaults to 1 (unlike PageRank's 4): the
-    self-vote union references ``labels`` TWICE per level, so the plan
-    doubles per uncheckpointed round — 4 deferred rounds re-evaluate the
-    last checkpoint's subtree up to 2⁴ times (measured 2× wall on the
-    planted-topology query at sf0.1: 5.2s → 2.7s).  PageRank's loop
-    references its state once per level (linear growth), so batching
-    checkpoints stays the win there."""
+    vote window per node; state is a (node, label) frame.  The self-vote
+    rides the persisted edge frame as a self-loop edge
+    ``(node, node, _self=1)``, so each round references ``labels`` once
+    and the plan grows linearly with rounds.  An input pair ``(x, x)``
+    still votes twice, as ``_self=0`` and ``_self=1``.  Iterations stop
+    early at zero changed labels; the cadence of that check and of the
+    lineage truncation lives in operators/fixpoint.py.  When ``n_iter``
+    runs out first, the labels after the last round are returned."""
+    a, b = f"`{id_a}`", f"`{id_b}`"
     edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .unionByName(
-            pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
+        pairs.selectExpr(
+            f"stack(4, {a}, {b}, 0, {b}, {a}, 0, {a}, {a}, 1, {b}, {b}, 1)"
+            " AS (src, dst, _self)"
         )
         .distinct()
         .persist()
     )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
+    labels = edges.filter(F.col("_self") == 1).select(
+        F.col("src").alias("node"), F.col("src").alias("label")
     )
     w = Window.partitionBy("node").orderBy(F.col("cnt").desc(), F.col("label").asc())
     # whole-partition frame over the SAME (node; cnt desc, label) sort — the
-    # old-label recovery below shares w's Exchange+Sort (r14: the
-    # convergence check used to be a separate join of new vs old labels
-    # per checkpointed round; the self-vote row already knows the old
-    # label, so mark it and lift it over the node partition instead).
+    # old-label recovery below shares w's Exchange+Sort: the self-vote row
+    # already knows the old label, so mark it and lift it over the node
+    # partition instead of joining new against old labels.
     w_all = (
         Window.partitionBy("node")
         .orderBy(F.col("cnt").desc(), F.col("label").asc())
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     )
-    for i in range(n_iter):
-        nbr = edges.join(labels, edges.src == labels.node).select(
-            F.col("dst").alias("node"), "label", F.lit(0).alias("_self")
+
+    def step(labels: DataFrame, _i: int) -> DataFrame:
+        votes = edges.join(labels, edges.src == labels.node).select(
+            F.col("dst").alias("node"), "label", "_self"
         )
-        votes = nbr.unionByName(
-            labels.withColumn("_self", F.lit(1))
-        )  # self-vote, marked: its (node, label) group carries the OLD label
-        new_labels = (
+        return (
             votes.groupBy("node", "label")
             .agg(F.count(F.lit(1)).alias("cnt"), F.max("_self").alias("_is_old"))
             .withColumn("_rn", F.row_number().over(w))
@@ -254,13 +244,7 @@ def label_propagation(
             .filter(F.col("_rn") == 1)
             .select("node", "label", (F.col("label") != F.col("_old")).alias("_chg"))
         )
-        if (i + 1) % checkpoint_every == 0:
-            new_labels = new_labels.localCheckpoint(eager=False)
-            changed = new_labels.filter(F.col("_chg")).count()
-            labels = new_labels.select("node", "label")
-            if changed == 0:
-                break
-        else:
-            labels = new_labels.select("node", "label")
+
+    labels, _ = fixpoint(step, labels, n_iter)
     edges.unpersist()
     return labels

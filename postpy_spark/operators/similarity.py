@@ -993,12 +993,12 @@ def nndescent(
     convergence loop production kNN-graph builders run, on top of the
     single round the contract registers.
 
-    Scale: the driver loop is bounded by ``max_rounds`` and its
-    per-round convergence check is two scalar actions (an anti-join
-    count of new edges and an edge count — never a collect of rows),
-    the same discipline as the connected-components fixpoint.  Each
-    round's result is localCheckpoint()ed so the lineage does not grow
-    with rounds (graphs are k|V| rows — small relative to the corpus).
+    Scale: the driver loop is bounded by ``max_rounds`` and each round is
+    ONE action: the round's result is lazily localCheckpoint()ed (so the
+    lineage does not grow with rounds; graphs are k|V| rows — small
+    relative to the corpus) and a single aggregate over it, left-joined
+    to the previous round's edge keys, returns both the new-edge count
+    and the edge count — never a collect of rows.
 
     ``stats`` (optional dict) records the convergence trajectory:
     ``rounds`` run, ``converged`` (early-stop fired), and ``per_round``
@@ -1010,13 +1010,19 @@ def nndescent(
     for _ in range(max_rounds):
         nxt = nndescent_round(
             prev, vectors, k, id_col=id_col, vec_col=vec_col
-        ).localCheckpoint()
-        new_edges = (
+        ).localCheckpoint(eager=False)
+        # distinct keys: the left join keeps nxt's row count exactly
+        seen = prev.select("src", "dst").distinct().withColumn("_seen", F.lit(1))
+        counts = (
             nxt.select("src", "dst")
-            .join(prev.select("src", "dst"), ["src", "dst"], "left_anti")
-            .count()
+            .join(seen, ["src", "dst"], "left")
+            .agg(
+                F.count(F.lit(1)).alias("total"),
+                F.count(F.when(F.col("_seen").isNull(), 1)).alias("new"),
+            )
+            .first()
         )
-        total = nxt.count()
+        new_edges, total = counts["new"], counts["total"]
         prev = nxt
         per_round.append(
             {

@@ -2032,10 +2032,13 @@ def ts_interpolate_linear_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (plans/r15/ts_interpolate_linear_*.txt); the spans aggregate and grid
     join disappear.  Rows identical: the fixed-point lerp arithmetic is
     byte-for-byte the same expression over the same (pv, nv, peh, neh)
-    values, observed hours output their own ``v``, and the old edge-clamp
-    branches were provably dead (the grid spans [min(h), max(h)], so a
-    running last/first over it never saw an all-null prefix/suffix —
-    every grid row has both neighbours).
+    values and observed hours output their own ``v``.
+
+    An hour whose ``SUM(value)`` is NULL stays on the grid but is a gap,
+    not an anchor, as in the oracle: the neighbour values and hours come
+    from ``lag``/``lead`` IGNORE NULLS over the hourly rows, a NULL first
+    or last hour clamps to its one observed neighbour, and a user with no
+    non-NULL hour gets NULL everywhere.
 
     The interpolation runs in 1e-4 FIXED POINT (4dp neighbour values ×
     exact integer hour weights, round-half-up integer divide) — a float
@@ -2044,24 +2047,39 @@ def ts_interpolate_linear_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").select(
         "user_id", F.date_trunc("hour", F.col("ts")).alias("h"), "value"
     )
-    ph = e.groupBy("user_id", "h").agg(F.round(F.sum("value"), 4).alias("v"))
     anchor = F.lit("1990-01-01 00:00:00").cast("timestamp_ntz")
+    ph = (
+        e.groupBy("user_id", "h")
+        .agg(F.round(F.sum("value"), 4).alias("v"))
+        .withColumn(
+            "oeh",
+            F.when(
+                F.col("v").isNotNull(), F.timestamp_diff("HOUR", anchor, F.col("h"))
+            ),
+        )
+    )
     w = Window.partitionBy("user_id").orderBy("h")
+
+    def skip_nulls(fn: str, c: str):
+        return F.expr(f"{fn}({c}) IGNORE NULLS").over(w)
+
     nxt = ph.select(
         "user_id",
         "h",
         "v",
-        F.timestamp_diff("HOUR", anchor, F.col("h")).alias("peh"),
-        F.lead("v").over(w).alias("nv"),
-        F.lead(F.timestamp_diff("HOUR", anchor, F.col("h"))).over(w).alias("neh"),
+        F.coalesce("v", skip_nulls("lag", "v")).alias("pv"),
+        F.coalesce("oeh", skip_nulls("lag", "oeh")).alias("peh"),
+        skip_nulls("lead", "v").alias("nv"),
+        skip_nulls("lead", "oeh").alias("neh"),
         F.lead("h").over(w).alias("nh"),
     )
-    # one grid row per hour in [h, nh): the anchor itself plus its gap
-    # hours; the LAST anchor per user (nh null) emits just itself, so the
-    # union over anchors is exactly the old sequence(min(h), max(h)) grid.
+    # one grid row per hour in [h, nh): the hourly row itself plus its gap
+    # hours; the LAST row per user (nh null) emits just itself, so the
+    # union over rows is exactly the sequence(min(h), max(h)) grid.
     g = nxt.select(
         "user_id",
         "v",
+        "pv",
         "peh",
         "nv",
         "neh",
@@ -2075,20 +2093,25 @@ def ts_interpolate_linear_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("h"),
     ).withColumn("eh", F.timestamp_diff("HOUR", anchor, F.col("h")))
-    observed = F.col("eh") == F.col("peh")
+    observed = F.col("v").isNotNull() & (F.col("eh") == F.col("peh"))
     scaled = g.select(
         "user_id",
         "h",
         observed.alias("observed"),
         "v",
+        "pv",
+        "nv",
         (
-            F.round(F.col("v") * 10000).cast("bigint") * (F.col("neh") - F.col("eh"))
+            F.round(F.col("pv") * 10000).cast("bigint") * (F.col("neh") - F.col("eh"))
             + F.round(F.col("nv") * 10000).cast("bigint") * (F.col("eh") - F.col("peh"))
         ).alias("num"),
         (F.col("neh") - F.col("peh")).alias("den"),
     )
-    interp = F.when(F.col("observed"), F.col("v")).otherwise(
-        F.expr("(2 * num + den) div (2 * den)").cast("double") / 10000
+    interp = (
+        F.when(F.col("observed"), F.col("v"))
+        .when(F.col("pv").isNull(), F.col("nv"))
+        .when(F.col("nv").isNull(), F.col("pv"))
+        .otherwise(F.expr("(2 * num + den) div (2 * den)").cast("double") / 10000)
     )
     return scaled.select(
         "user_id", "h", interp.alias("v_interp"), "observed"
@@ -2779,11 +2802,9 @@ def graph_label_propagation_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     bridge = c.filter(F.col("c_custkey") % 10 == 4).select(
         F.col("c_custkey").alias("id_a"), (F.col("c_custkey") + 1).alias("id_b")
     )
-    # cliques homogenize in ~3 rounds; 8 with an every-2 fixpoint check
-    # keeps the driver-session stage count bounded
-    labels = label_propagation(
-        clique.unionByName(bridge), n_iter=8, checkpoint_every=2
-    )
+    # cliques homogenize in ~3 rounds; the fixpoint check cadence is
+    # operators/fixpoint.py's
+    labels = label_propagation(clique.unionByName(bridge), n_iter=8)
     return labels.groupBy(F.col("label").alias("community")).agg(
         F.count(F.lit(1)).alias("size"), F.min("node").alias("min_member")
     )

@@ -118,13 +118,30 @@ def test_connected_components_multiple_components(spark):
     assert label[500] == 500 and label[501] == 500
 
 
+def _union_find_components(edges):
+    """Pure-Python reference: node -> min node id of its component."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
 def test_cc_fused_steps_identical(spark):
-    """steps_per_job=2 (the fused contracted-merge mode) must yield labels
-    identical to the per-step loop on shapes covering both parities of
-    changing-depth: a long chain (deep), a star (depth 1), disjoint
-    components, and duplicate/mirrored input pairs.  Soundness argument in
-    the operator docstring: the last fused step's change flag alone
-    detects the fixpoint."""
+    """connected_components checks convergence once per block of fused
+    steps (operators/fixpoint.py); its labels must equal a pure-Python
+    union-find on shapes covering both parities of changing-depth: a long
+    chain (deep), a star (depth 1), disjoint components, and
+    duplicate/mirrored input pairs."""
     shapes = {
         "chain": [(i, i + 1) for i in range(23)],
         "star": [(7, i) for i in range(8, 20)],
@@ -134,16 +151,64 @@ def test_cc_fused_steps_identical(spark):
     }
     for name, edges in shapes.items():
         df = spark.createDataFrame(edges, "id_a INT, id_b INT")
-        one = dedup.connected_components(df, steps_per_job=1)
-        two = dedup.connected_components(df, steps_per_job=2)
-        assert one.exceptAll(two).count() == 0, name
-        assert two.exceptAll(one).count() == 0, name
+        got = {r.node: r.component for r in dedup.connected_components(df).collect()}
+        assert got == _union_find_components(edges), name
     # exhaustion must still raise when the budget (in STEPS) is too small
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(50)], "id_a INT, id_b INT"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(chain, max_iterations=2, steps_per_job=2)
+        dedup.connected_components(chain, max_iterations=2)
+
+
+def test_graph_loops_release_their_checkpoints(spark):
+    """Each graph loop leaves exactly ONE persisted RDD behind per call —
+    the result's own checkpoint — and never touches a cache its caller
+    made.  The result stays readable: collecting it twice gives the same
+    rows.
+
+    Tracks the SET of persisted-RDD ids (see
+    test_dedup_cache_generations_do_not_grow for why not raw counts), and
+    polls because ``DataFrame.unpersist`` releases asynchronously."""
+    import time
+
+    from postpy_spark.operators.graph import (
+        label_propagation,
+        pagerank,
+        pagerank_exact,
+    )
+
+    jsc = spark.sparkContext._jsc
+
+    def pids():
+        return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
+
+    edges = [(i, i + 1) for i in range(12)] + [(20, 21), (21, 22), (22, 20)]
+    before_upstream = pids()
+    pairs = spark.createDataFrame(edges, "id_a BIGINT, id_b BIGINT").persist()
+    pairs.count()
+    upstream = pids() - before_upstream
+    assert upstream, "the caller's cache should be registered"
+    directed = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    calls = {
+        "connected_components": lambda: dedup.connected_components(pairs),
+        "label_propagation": lambda: label_propagation(pairs, n_iter=5),
+        "pagerank": lambda: pagerank(pairs, n_iter=5),
+        "pagerank_exact": lambda: pagerank_exact(directed, n_iter=3),
+    }
+    for name, call in calls.items():
+        ids0 = pids()
+        out = call()
+        result_rdd = (
+            out._jdf.queryExecution().analyzed().collectLeaves().head().rdd().id()
+        )
+        deadline = time.time() + 15
+        while pids() - ids0 != {result_rdd} and time.time() < deadline:
+            time.sleep(0.2)
+        assert pids() - ids0 == {result_rdd}, (name, pids() - ids0, result_rdd)
+        assert upstream <= pids(), name
+        assert sorted(out.collect()) == sorted(out.collect()), name
+    pairs.unpersist()
 
 
 def test_simhash_detects_exact_dups(spark, docs):
@@ -1309,6 +1374,59 @@ def test_label_propagation_communities_vs_components(spark):
     comp = connected_components(df)
     n_comp = comp.select("component").distinct().count()
     assert n_comp == 2  # CC merges the bridged cliques; LPA does not
+
+
+def _lpa_reference(pairs, n_iter):
+    """Pure-Python synchronous LPA: every node votes its own label once
+    (self-vote) and each neighbour over the mirrored, de-duplicated edge
+    set votes its label; the winner is count DESC, then label ASC.  An
+    input pair (x, x) is an edge from x to itself, so x votes twice."""
+    from collections import Counter
+
+    edges = set(pairs) | {(b, a) for a, b in pairs}
+    voters = {}
+    for src, dst in edges:
+        voters.setdefault(src, [])
+        voters.setdefault(dst, []).append(src)
+    label = {n: n for n in voters}
+    for _ in range(n_iter):
+        new = {}
+        for n, srcs in voters.items():
+            votes = Counter(label[s] for s in srcs)
+            votes[label[n]] += 1
+            new[n] = min(votes, key=lambda lab: (-votes[lab], lab))
+        if new == label:
+            break
+        label = new
+    return label
+
+
+def test_label_propagation_matches_python_reference(spark):
+    """label_propagation equals the synchronous Python reference on the
+    two-bridged-cliques graph, on a graph with (x, x) pairs, and on a
+    seeded random sparse graph, with n_iter both odd and even (a graph
+    that has not converged returns the labels after the last round)."""
+    import random
+
+    from postpy_spark.operators.graph import label_propagation
+
+    cliques = []
+    for base in (0, 10, 100):
+        ids = [base + i for i in range(4)]
+        cliques += [(x, y) for x in ids for y in ids if x < y]
+    cliques.append((3, 10))
+    self_pairs = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 4), (4, 5), (5, 5), (5, 6)]
+    rng = random.Random(20)
+    sparse = sorted({(rng.randrange(40), rng.randrange(40)) for _ in range(55)})
+    for name, edges in {
+        "cliques": cliques,
+        "self_pairs": self_pairs,
+        "random_sparse": sparse,
+    }.items():
+        df = spark.createDataFrame(edges, "id_a BIGINT, id_b BIGINT")
+        for n_iter in (3, 4):
+            got = {r.node: r.label for r in label_propagation(df, n_iter=n_iter).collect()}
+            assert got == _lpa_reference(edges, n_iter), (name, n_iter)
 
 
 def test_knn_graph_recall_vs_bruteforce(spark):

@@ -294,6 +294,56 @@ def test_ts_interpolate_linear_edges(spark, tmp_path):
     }
 
 
+def test_ts_interpolate_linear_null_hours_match_oracle(spark, tmp_path):
+    """An hour whose SUM(value) is NULL is a gap, not an anchor: a NULL
+    middle hour is interpolated, a NULL first/last hour clamps to its one
+    observed neighbour, and a user with no non-NULL hour gets NULL
+    everywhere.  The query must equal its DuckDB oracle on such a file."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from postpy_spark.registry import load_all
+    from postpy_spark.testing import canon_rows
+
+    t0 = datetime.datetime(2024, 1, 1)
+    series = [
+        # user 1: NULL first hour, NULL middle hour, NULL last hour, and
+        # an hour where a NULL sits next to a real value
+        (1, 0, None), (1, 1, 10.0), (1, 3, None), (1, 5, 31.0), (1, 5, None),
+        (1, 7, None),
+        # user 2: no non-NULL hour at all
+        (2, 0, None), (2, 2, None),
+        # user 3: no NULLs
+        (3, 0, 1.0), (3, 3, 2.0),
+    ]
+    table = pa.table(
+        {
+            "event_id": pa.array(range(len(series)), pa.int64()),
+            "ts": pa.array(
+                [t0 + datetime.timedelta(hours=h) for _, h, _ in series],
+                pa.timestamp("us"),
+            ),
+            "user_id": pa.array([u for u, _, _ in series], pa.int64()),
+            "event_type": pa.array(["view"] * len(series)),
+            "value": pa.array([v for _, _, v in series], pa.float64()),
+            "props": pa.array(["{}"] * len(series)),
+        }
+    )
+    path = tmp_path / "events.parquet"
+    pq.write_table(table, path)
+
+    rq = load_all()["ts_interpolate_linear"]
+    got = rq.fn(spark, str(tmp_path))
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
+    want = con.execute(rq.oracle)
+    want_cols = [d[0] for d in want.description]
+    assert canon_rows(got.columns, got.collect()) == canon_rows(
+        want_cols, want.fetchall()
+    )
+
+
 def test_cms_contract_and_mergeability(spark):
     """Count-min sketch contract: estimates NEVER undercount, overshoot is
     bounded by colliding mass; and shard sketches merged by counter

@@ -13,9 +13,6 @@ Usage: python tools/check.py [--sf /root/testdata/sf0.01] [names...]
 from __future__ import annotations
 
 import argparse
-import datetime
-import decimal
-import math
 import os
 import sys
 import time
@@ -28,45 +25,11 @@ import duckdb  # noqa: E402
 from postpy_spark import registry  # noqa: E402
 from postpy_spark.io import TABLES  # noqa: E402
 from postpy_spark.session import get_spark  # noqa: E402
-
-
-def canon(v):
-    if v is None:
-        return None
-    if isinstance(v, bool):
-        return ("bool", v)
-    if isinstance(v, float):
-        if math.isnan(v):
-            return ("f", "nan")
-        return ("f", v)
-    if isinstance(v, int):
-        return ("i", v)
-    if isinstance(v, decimal.Decimal):
-        return ("dec", str(v))
-    if isinstance(v, datetime.datetime):
-        return ("ts", v.replace(tzinfo=None).isoformat())
-    if isinstance(v, datetime.date):
-        return ("d", v.isoformat())
-    if isinstance(v, bytes):
-        return ("b", v.hex())
-    if isinstance(v, (list, tuple)):
-        return tuple(canon(x) for x in v)
-    if isinstance(v, dict):
-        return tuple(sorted((k, canon(x)) for k, x in v.items()))
-    return v
-
-
 from postpy_spark.testing import (  # noqa: E402
+    canon_rows,
     nonscalar_top_level_columns,
     type_parity_errors,
 )
-
-
-def canon_rows(cols: list[str], rows) -> tuple[list[str], list]:
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    sorted_cols = [cols[i] for i in order]
-    out = sorted((tuple(canon(r[i]) for i in order) for r in rows), key=repr)
-    return sorted_cols, out
 
 
 def main() -> int:
