@@ -5,7 +5,8 @@ postpy analogs [U]:
 - ``postpy/dml.py::upsert_records / create_upsert_statement`` (INSERT … ON
   CONFLICT DO UPDATE) → :func:`merge_upsert` (anti-join + union rewrite; no
   ACID table format required) and :func:`upsert_into_path` (materialized
-  parquet target with staged atomic swap).
+  parquet target through :func:`merge_into_path`, the one read–merge–swap
+  with a staged atomic swap).
 - ``postpy/dml.py::insert / insert_many`` → :func:`insert_records`.
 - ``postpy/admin.py::get_user_tables / get_column_metadata /
   get_primary_keys`` → :func:`list_tables` / :func:`describe_table` /
@@ -23,9 +24,10 @@ postpy analogs [U]:
 
 from __future__ import annotations
 
+import os
 import shutil
 import uuid
-from collections.abc import Iterable, Sequence
+from collections.abc import Callable, Iterable, Sequence
 from functools import reduce
 
 from pyspark.sql import DataFrame, Row, SparkSession
@@ -39,12 +41,15 @@ from postpy_spark.session import ensure_runtime_confs
 # ---------------------------------------------------------------------------
 
 
-def merge_upsert(target: DataFrame, source: DataFrame, keys: Sequence[str]) -> DataFrame:
+def merge_upsert(
+    target: DataFrame | None, source: DataFrame, keys: Sequence[str]
+) -> DataFrame:
     """``INSERT … ON CONFLICT (keys) DO UPDATE`` semantics as a DataFrame
     transform: source rows win on key collision, unmatched target rows are
     kept, duplicate keys inside ``source`` collapse to one arbitrary-but-
     deterministic winner (PostgreSQL raises instead; we dedupe because
-    distributed batches routinely carry intra-batch dupes).
+    distributed batches routinely carry intra-batch dupes).  A ``None``
+    target (no table yet) yields the deduplicated source.
 
     Plan shape: one anti-join (target ∖ source) + union — both sides shuffle
     once on the key; with AQE the anti-join broadcasts when source is small,
@@ -52,6 +57,8 @@ def merge_upsert(target: DataFrame, source: DataFrame, keys: Sequence[str]) -> D
     """
     keys = list(keys)
     src = source.dropDuplicates(keys)
+    if target is None:
+        return src
     kept = target.join(src, on=keys, how="left_anti")
     return kept.unionByName(src)
 
@@ -148,12 +155,25 @@ def upsert_into_path(
     atomic swap (read-modify-write; the parquet analog of postpy's
     server-side upsert).  On Delta/Iceberg this would be ``MERGE INTO``."""
     ensure_runtime_confs(spark)
-    try:
-        target = spark.read.parquet(path)
-        merged = merge_upsert(target, source, keys)
-    except Exception:
-        merged = source.dropDuplicates(list(keys))
-    atomic_overwrite(merged, path)
+    merge_into_path(spark, path, lambda target: merge_upsert(target, source, keys))
+
+
+def merge_into_path(
+    spark: SparkSession,
+    path: str,
+    merge: Callable[[DataFrame | None], DataFrame | None],
+) -> None:
+    """The one read–merge–swap for a parquet-path table.
+
+    Reads the current table when ``path`` exists (a local path, as
+    :func:`atomic_overwrite`'s directory move already assumes) and calls
+    ``merge(current_or_None)``.  A ``None`` result writes nothing; any
+    other result replaces the table through :func:`atomic_overwrite`.
+    A read or merge error propagates and the table stays as it was."""
+    current = spark.read.parquet(path) if os.path.exists(path) else None
+    merged = merge(current)
+    if merged is not None:
+        atomic_overwrite(merged, path)
 
 
 def atomic_overwrite(

@@ -429,8 +429,9 @@ def connected_components(
     Each iteration does two monotone label-lowering steps:
 
     1. edge propagation — ``component := min(component, min over neighbors'
-       components)`` (one hash join producing neighbor messages, unioned
-       with each node's self row into a single min-aggregate);
+       components)`` (one hash join producing neighbor messages into a
+       single min-aggregate; each node's own label rides the edge frame
+       as a self-loop edge ``(node, node, _self)``, as in LPA);
     2. pointer doubling (shortcut) — ``component := min(component,
        component-of-component)``.  Labels are always node ids of the same
        component, so the label forest is a parent-pointer structure; the
@@ -445,7 +446,8 @@ def connected_components(
 
     ``pairs_unique=True`` is a caller promise that ``pairs`` carries each
     undirected pair at most once — it skips the edge-list distinct (a full
-    edge-sized exchange).  The promise is perf-only: min-aggregation is
+    edge-sized exchange); only the self-loops, one per pair end, are
+    deduplicated.  The promise is perf-only: min-aggregation is
     duplicate-insensitive, so labels are identical either way; duplicated
     input pairs just inflate every iteration's message join.
 
@@ -456,10 +458,16 @@ def connected_components(
         # with no iterations the loop body never runs and the identity
         # labeling below would be returned as silently-wrong output
         raise ValueError(f"max_iterations must be >= 1, got {max_iterations}")
-    edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).unionByName(
-        pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
+    a, b = f"`{id_a}`", f"`{id_b}`"
+    edges = pairs.selectExpr(
+        f"stack(4, {a}, {b}, false, {b}, {a}, false, {a}, {a}, true, {b}, {b}, true)"
+        " AS (src, dst, _self)"
     )
-    if not pairs_unique:
+    if pairs_unique:
+        edges = edges.filter(~F.col("_self")).unionByName(
+            edges.filter(F.col("_self")).distinct()
+        )
+    else:
         edges = edges.distinct()
     # materialize ONCE: every iteration joins edges, and without this the
     # upstream pair generation (e.g. a jaccard pair join) re-executes per
@@ -472,40 +480,22 @@ def connected_components(
         """One propagation+doubling step: (node, component, _chg)."""
         if labels is None:
             # FIRST iteration specialized (r14 optimization round 3): the
-            # label map is the identity, so the neighbor message for edge
-            # (src, dst) is dst itself — the message join AND the
-            # distinct-node label seed collapse into one aggregate over the
-            # mirrored edge list (mirroring guarantees every node appears
-            # as src).  Measured 0.49 -> 0.29 s warm on the sf0.1 gram
-            # graph's opening iteration, labels identical (exceptAll 0/0).
-            propagated = (
-                edges.groupBy("src")
-                .agg(F.min("dst").alias("_nbr"))
-                .select(
-                    F.col("src").alias("node"),
-                    F.least("src", "_nbr").alias("component"),
-                    F.col("src").alias("_old"),
-                )
-            )
+            # label map is the identity, so the message for edge (src, dst)
+            # is dst itself and the self-loop carries the node's own id —
+            # the message join AND the distinct-node label seed collapse
+            # into one min over the edge list (every node appears as src).
+            propagated = edges.groupBy("src").agg(
+                F.min("dst").alias("component")
+            ).select(F.col("src").alias("node"), "component", F.col("src").alias("_old"))
         else:
-            # edge propagation as a MESSAGE UNION rather than agg + join-back
-            # (r14 optimization round 2): each node's self row rides the same
-            # aggregate as its neighbor messages, so min(component) over the
-            # union IS least(own, neighbor-min) and min(component WHERE _self)
-            # recovers the old label for the convergence flag — the separate
-            # left join of labels against neighbor_min (one shuffle join per
-            # iteration) disappears.  Measured 1.55 -> 1.17 s warm over the
-            # 4-iteration sf0.1 CC loop, labels identical (exceptAll 0/0).
-            msgs = edges.join(labels, edges.dst == labels.node).select(
-                F.col("src").alias("node"),
-                "component",
-                F.lit(False).alias("_self"),
-            )
+            # edge propagation in ONE aggregate over the message join: the
+            # self-loop's message is the node's own label, so min(component)
+            # IS least(own, neighbor-min) and min(component WHERE _self)
+            # recovers the old label for the convergence flag; ``labels`` is
+            # referenced once per step.
             propagated = (
-                msgs.unionByName(
-                    labels.select("node", "component", F.lit(True).alias("_self"))
-                )
-                .groupBy("node")
+                edges.join(labels, edges.dst == labels.node)
+                .groupBy(F.col("src").alias("node"))
                 .agg(
                     F.min("component").alias("component"),
                     F.min(F.when(F.col("_self"), F.col("component"))).alias("_old"),

@@ -2672,8 +2672,7 @@ def _minhash_eval(spark: SparkSession, d: DataFrame) -> DataFrame:
     verified LSH pairs vs exact all-pairs shingle-Jaccard truth on a
     bounded audit slice → one (truth, candidate, verified, precision,
     recall) row."""
-    stats: dict = {}
-    verified = dedup.minhash_dedup_pairs(d, threshold=0.6, stats=stats)
+    verified = dedup.minhash_dedup_pairs(d, threshold=0.6)
     ids = d.select("doc_id")
     all_pairs = (
         ids.withColumnRenamed("doc_id", "id_a")

@@ -551,14 +551,7 @@ def stream_python_datasource_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("sum_cents"),
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    STR.run_available_now(
+        agg.writeStream.format("memory").queryName(name).outputMode("complete")
     )
-    if not q.awaitTermination(180):
-        q.stop()
-        raise TimeoutError("stream_python_datasource: stream did not drain")
     return spark.table(name).select("g", "n", "sum_id", "sum_cents")

@@ -10,6 +10,14 @@ pytest suite replays the events table as a real file-source stream
 Scale posture: watermarks bound all state stores; sinks are idempotent
 (foreachBatch + keyed latest-wins merge) so retried micro-batches cannot
 double-count; the file replay uses maxFilesPerTrigger to emulate arrival.
+
+Two functions carry every run and every sink.  :func:`run_available_now`
+is the one way to run a stream: it drains the source under the
+``availableNow`` trigger, waits at most ``DRAIN_TIMEOUT_S`` and stops the
+query and raises ``TimeoutError`` when the drain does not finish.  Each
+parquet-path sink's micro-batch goes through
+:func:`postpy_spark.etl.merge_into_path`, the one read–merge–swap: a
+table that cannot be read fails the batch and is left as it was.
 """
 
 from __future__ import annotations
@@ -19,7 +27,9 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from postpy_spark.etl import ivm_merge, merge_into_path
 from postpy_spark.io import load_table
 from postpy_spark.session import ensure_runtime_confs
 
@@ -27,6 +37,8 @@ EVENT_SCHEMA = (
     "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, "
     "value DOUBLE, props STRING"
 )
+
+DRAIN_TIMEOUT_S = 180
 
 # ---------------------------------------------------------------------------
 # Plan builders (batch + streaming)
@@ -162,17 +174,29 @@ def read_event_stream(spark: SparkSession, chunk_dir: str, files_per_trigger: in
     return stream.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
+def run_available_now(writer: DataStreamWriter) -> StreamingQuery:
+    """Start ``writer`` under the ``availableNow`` trigger and wait for it
+    to drain.  A query that has not terminated after ``DRAIN_TIMEOUT_S`` is
+    stopped and ``TimeoutError`` is raised, so no caller compares a partial
+    table; a query that fails re-raises its error from the wait (Spark has
+    already stopped it)."""
+    q = writer.trigger(availableNow=True).start()
+    if not q.awaitTermination(DRAIN_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"stream {q.name or q.id} did not drain in {DRAIN_TIMEOUT_S} s"
+        )
+    return q
+
+
 def run_stream_to_memory(stream_df: DataFrame, query_name: str, output_mode: str = "complete") -> DataFrame:
     """Run an availableNow streaming query into an in-memory sink and return
     the final table (test/verification harness)."""
-    q = (
+    run_available_now(
         stream_df.writeStream.format("memory")
         .queryName(query_name)
         .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     return stream_df.sparkSession.table(query_name)
 
 
@@ -200,24 +224,18 @@ def stream_upsert_to_path(
 ) -> None:
     """writeStream.foreachBatch → keyed latest-wins merge into a parquet
     path with a staged atomic swap per micro-batch (idempotent sink)."""
-    from postpy_spark.etl import atomic_overwrite
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        spark_l = batch.sparkSession
-        try:
-            existing = spark_l.read.parquet(target_path)
-        except Exception:
-            existing = None
-        merged = latest_wins_merge(existing, batch, keys, order_cols)
-        atomic_overwrite(merged, target_path)
+        merge_into_path(
+            batch.sparkSession,
+            target_path,
+            lambda existing: latest_wins_merge(existing, batch, keys, order_cols),
+        )
 
-    q = (
+    run_available_now(
         stream_df.writeStream.foreachBatch(merge_batch)
         .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
 
 
 # ---------------------------------------------------------------------------
@@ -247,30 +265,25 @@ def make_ivm_batch_merger(
     Exposed as a module-level factory (returned function is driver-side —
     foreachBatch is never pickled to workers) so the crash-replay pytest
     can drive the same body the stream runs."""
-    from postpy_spark.etl import atomic_overwrite, ivm_merge
-
     add_cols = list(sum_cols)
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        spark_l = batch.sparkSession
         delta = batch.groupBy(*keys).agg(
             F.count(F.lit(1)).cast("bigint").alias(count_col),
             *[expr.alias(name) for name, expr in sum_cols.items()],
         )
-        try:
-            mv = spark_l.read.parquet(target_path)
-        except Exception:
-            mv = None
-        if mv is not None:
-            last = mv.agg(F.max("_last_batch")).collect()[0][0]
-            if last is not None and batch_id <= last:
-                return  # replayed batch: already folded into the MV
-            merged = ivm_merge(mv.drop("_last_batch"), delta, keys, count_col, add_cols)
-        else:
-            merged = delta.filter(F.col(count_col) > 0)
-        atomic_overwrite(
-            merged.withColumn("_last_batch", F.lit(batch_id)), target_path
-        )
+
+        def merge(mv: DataFrame | None) -> DataFrame | None:
+            if mv is None:
+                merged = delta.filter(F.col(count_col) > 0)
+            else:
+                last = mv.agg(F.max("_last_batch")).collect()[0][0]
+                if last is not None and batch_id <= last:
+                    return None  # replayed batch: already folded into the MV
+                merged = ivm_merge(mv.drop("_last_batch"), delta, keys, count_col, add_cols)
+            return merged.withColumn("_last_batch", F.lit(batch_id))
+
+        merge_into_path(batch.sparkSession, target_path, merge)
 
     return merge_batch
 
@@ -287,15 +300,12 @@ def stream_ivm_to_path(
     aggregate maintained incrementally across micro-batches; the scale
     contract is ivm_merge's: the MV is only ever the stream side of
     broadcast joins, no Exchange carries it)."""
-    q = (
+    run_available_now(
         stream_df.writeStream.foreachBatch(
             make_ivm_batch_merger(target_path, keys, count_col, sum_cols)
         )
         .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
 
 
 # ---------------------------------------------------------------------------
@@ -407,28 +417,23 @@ def stream_scd2_to_path(
     order-insensitive across micro-batch arrival: the final CURRENT slice
     always equals the global latest-per-key state; the history chain
     reflects observed transitions."""
-    from postpy_spark.etl import atomic_overwrite
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
         if not batch.take(1):
             return
         latest = latest_wins_merge(None, batch, keys, [ts_col, id_col])
-        try:
-            target = spark.read.parquet(target_path)
-        except Exception:
-            target = None
-        merged = scd2_apply_latest(
-            target, latest, keys, compare_cols, ts_col, id_col
+        merge_into_path(
+            spark,
+            target_path,
+            lambda target: scd2_apply_latest(
+                target, latest, keys, compare_cols, ts_col, id_col
+            ),
         )
-        atomic_overwrite(merged, target_path)
 
-    q = (
+    run_available_now(
         stream_df.writeStream.foreachBatch(merge_batch)
         .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
 
 
 # ---------------------------------------------------------------------------

@@ -123,12 +123,9 @@ class VersionedTable:
         upserters need an external lock, same as Delta without a LogStore)."""
         from postpy_spark.etl import merge_upsert
 
-        try:
-            current = self.read(spark)
-            merged = merge_upsert(current, source, keys)
-        except FileNotFoundError:
-            merged = source.dropDuplicates(keys)
-        return self.write(merged)
+        v = self.current_version()
+        current = None if v is None else self.read(spark, v)
+        return self.write(merge_upsert(current, source, keys))
 
     def vacuum(self, keep: int = 2) -> list[int]:
         """Drop version dirs older than the newest ``keep``, never the

@@ -54,6 +54,7 @@ def test_upsert_empty_source_and_target(spark):
     empty = t.filter("k < 0")
     assert etl.merge_upsert(t, empty, ["k"]).count() == 1
     assert etl.merge_upsert(empty, t, ["k"]).count() == 1
+    assert etl.merge_upsert(None, t.unionByName(t), ["k"]).count() == 1
 
 
 def test_upsert_into_path_roundtrip(spark, tmp_path):
@@ -64,6 +65,32 @@ def test_upsert_into_path_roundtrip(spark, tmp_path):
     )
     got = {r.k: r.v for r in spark.read.parquet(path).collect()}
     assert got == {1: 20, 2: 30}
+
+
+def test_upsert_into_path_schema_conflict_raises_and_keeps_target(spark, tmp_path):
+    """A source whose columns do not match the table fails the upsert; the
+    table keeps its rows instead of being replaced by the source."""
+    from pyspark.errors import AnalysisException
+
+    path = str(tmp_path / "t")
+    rows = [(k, 10 * k) for k in range(5)]
+    etl.upsert_into_path(spark, path, spark.createDataFrame(rows, "k INT, v INT"), ["k"])
+    extra = spark.createDataFrame([(1, 99, "x")], "k INT, v INT, w STRING")
+    with pytest.raises(AnalysisException):
+        etl.upsert_into_path(spark, path, extra, ["k"])
+    assert sorted(map(tuple, spark.read.parquet(path).collect())) == rows
+
+
+def test_merge_into_path_none_writes_nothing(spark, tmp_path):
+    path = str(tmp_path / "t")
+    etl.merge_into_path(spark, path, lambda current: None)
+    assert not os.path.exists(path)
+    etl.upsert_into_path(spark, path, spark.createDataFrame([Row(k=1, v=10)]), ["k"])
+    before = sorted(os.listdir(path))
+    seen = []
+    etl.merge_into_path(spark, path, lambda current: seen.append(current.count()))
+    assert seen == [1]
+    assert sorted(os.listdir(path)) == before
 
 
 # ---------------------------------------------------------------------------

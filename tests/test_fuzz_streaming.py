@@ -49,6 +49,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from postpy_spark import streaming as STR
 from postpy_spark.testing import compare_spark_duckdb
 
 # max_examples 10 → 6 (r15): driver pytest time budget (VERIFY_r14
@@ -128,16 +129,13 @@ def _replay(spark, chunks, build, output_mode):
         .parquet(f"{root}/chunk_*")
     )
     name = f"fz_stream_{n}"
-    q = (
+    STR.run_available_now(
         build(stream)
         .writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
-        .trigger(availableNow=True)
         .option("checkpointLocation", f"{root}/ckpt")
-        .start()
     )
-    q.awaitTermination(180)
     out = spark.sql(f"SELECT * FROM {name}")
     return out
 

@@ -26,6 +26,97 @@ def assert_same(df_a, df_b):
     assert ra == rb
 
 
+class _FakeQuery:
+    name = "fake"
+
+    def __init__(self, drained):
+        self.drained = drained
+        self.waited = None
+        self.stopped = False
+
+    def awaitTermination(self, timeout=None):
+        self.waited = timeout
+        return self.drained
+
+    def stop(self):
+        self.stopped = True
+
+
+class _FakeWriter:
+    def __init__(self, query):
+        self.query = query
+        self.trigger_kwargs = None
+
+    def trigger(self, **kwargs):
+        self.trigger_kwargs = kwargs
+        return self
+
+    def start(self):
+        return self.query
+
+
+def test_run_available_now_stops_and_raises_on_timeout():
+    q = _FakeQuery(drained=False)
+    writer = _FakeWriter(q)
+    with pytest.raises(TimeoutError):
+        STR.run_available_now(writer)
+    assert writer.trigger_kwargs == {"availableNow": True}
+    assert q.waited == STR.DRAIN_TIMEOUT_S
+    assert q.stopped
+
+
+def test_run_available_now_returns_drained_query():
+    q = _FakeQuery(drained=True)
+    assert STR.run_available_now(_FakeWriter(q)) is q
+    assert q.waited == STR.DRAIN_TIMEOUT_S
+    assert not q.stopped
+
+
+def test_run_available_now_timeout_leaves_no_active_query(spark, chunks, monkeypatch):
+    """A real stream that cannot drain in time is stopped, not left running."""
+    monkeypatch.setattr(STR, "DRAIN_TIMEOUT_S", 0.001)
+    stream = STR.read_event_stream(spark, chunks)
+    with pytest.raises(TimeoutError):
+        STR.run_available_now(stream.writeStream.format("noop"))
+    assert spark.streams.active == []
+
+
+def _file_bytes(directory):
+    return {
+        name: (directory / name).read_bytes() for name in sorted(os.listdir(directory))
+    }
+
+
+@pytest.mark.parametrize("sink", ["upsert", "scd2", "ivm"])
+def test_stream_sink_unreadable_target_raises_and_keeps_files(spark, chunks, tmp_path, sink):
+    """A sink whose target exists but cannot be read fails the stream and
+    leaves the target's files untouched; it never replaces the table with
+    one micro-batch."""
+    from pyspark.errors import StreamingQueryException
+
+    target = tmp_path / "target"
+    target.mkdir()
+    (target / "part-0.parquet").write_bytes(b"not a parquet file")
+    before = _file_bytes(target)
+    stream = STR.read_event_stream(spark, chunks)
+    path, ckpt = str(target), str(tmp_path / "ckpt")
+    with pytest.raises(StreamingQueryException):
+        if sink == "upsert":
+            STR.stream_upsert_to_path(spark, stream, path, ["event_id"], ["ts"], ckpt)
+        elif sink == "scd2":
+            STR.stream_scd2_to_path(
+                spark, stream, path, ["user_id"], ["event_type", "value"],
+                "ts", "event_id", ckpt,
+            )
+        else:
+            STR.stream_ivm_to_path(
+                stream, path, ["event_type"], "n_events",
+                {"sum_value": F.sum("value")}, ckpt,
+            )
+    assert _file_bytes(target) == before
+    assert spark.streams.active == []
+
+
 def test_streaming_tumbling_converges(spark, chunks):
     stream = STR.read_event_stream(spark, chunks)
     got = STR.run_stream_to_memory(
@@ -275,10 +366,10 @@ def test_foreachbatch_two_sink_fanout(spark, chunks, tmp_path):
         batch.unpersist()
 
     stream = STR.read_event_stream(spark, chunks)
-    q = (stream.writeStream.foreachBatch(fan_out)
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    STR.run_available_now(
+        stream.writeStream.foreachBatch(fan_out)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+    )
     e = load_table(spark, SF_SMOKE, "events")
     assert spark.read.parquet(raw).count() == e.count()
     per_type = (spark.read.parquet(agg).groupBy("event_type")
@@ -405,7 +496,6 @@ def test_stream_cdc_apply_converges(spark, tmp_path):
     commutative/associative, so chunking and arrival order don't matter),
     must converge to the one-shot batch snapshot (etl_cdc_apply)."""
     from postpy_spark import etl
-    from postpy_spark.etl import atomic_overwrite
     from postpy_spark.registry import load_all
 
     li = load_table(spark, SF_SMOKE, "lineitem")
@@ -422,23 +512,19 @@ def test_stream_cdc_apply_converges(spark, tmp_path):
     state_path = str(tmp_path / "cdc_state")
 
     def merge_batch(batch, batch_id):
-        s = batch.sparkSession
         compacted = etl.cdc_compact(
             etl.cdc_pack(batch, key="l_orderkey", seq="l_linenumber", qty="l_quantity")
         )
-        try:
-            existing = s.read.parquet(state_path)
-        except Exception:
-            existing = None
-        atomic_overwrite(etl.cdc_merge_states(existing, compacted), state_path)
+        etl.merge_into_path(
+            batch.sparkSession,
+            state_path,
+            lambda existing: etl.cdc_merge_states(existing, compacted),
+        )
 
-    q = (
+    STR.run_available_now(
         stream.writeStream.foreachBatch(merge_batch)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     got = etl.cdc_snapshot(spark.read.parquet(state_path))
     batch = load_all()["etl_cdc_apply"].fn(spark, SF_SMOKE)
     assert_same(got, batch)

@@ -108,10 +108,10 @@ def test_streaming_commits_as_versions(spark, tmp_path, vt):
         if batch.count():
             vt.upsert(batch.sparkSession, batch, keys=["event_id"])
 
-    q = (stream.writeStream.foreachBatch(commit_batch)
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    STR.run_available_now(
+        stream.writeStream.foreachBatch(commit_batch)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+    )
 
     e = load_table(spark, SF_SMOKE, "events")
     versions = vt.versions()

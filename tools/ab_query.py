@@ -5,7 +5,9 @@ tools/ab_bench.py answers "did the whole headline set move"; this answers
 "did THIS query's steady-state cost move" without paying two full bench
 runs per pair.  Protocol matches docs/BENCH_NOTES.md discipline: fresh
 process per side per iteration, sides alternate back-to-back so machine
-load hits both equally, report per-side min/median.
+load hits both equally, and the side that runs first alternates from pair
+to pair so an order effect cannot pose as a change; report per-side
+min/median.
 
 Usage: python tools/ab_query.py <query> <repoA> <repoB> [n_pairs=3] [sf_dir]
 """
@@ -65,11 +67,17 @@ def main() -> None:
     times_a: list[float] = []
     times_b: list[float] = []
     for i in range(n_pairs):
-        ta = run_side(a, query, sf_dir)
-        tb = run_side(b, query, sf_dir)
+        if i % 2 == 0:
+            order = "A,B"
+            ta = run_side(a, query, sf_dir)
+            tb = run_side(b, query, sf_dir)
+        else:
+            order = "B,A"
+            tb = run_side(b, query, sf_dir)
+            ta = run_side(a, query, sf_dir)
         times_a += ta
         times_b += tb
-        print(f"pair {i + 1}: A={ta} B={tb}", flush=True)
+        print(f"pair {i + 1} ({order}): A={ta} B={tb}", flush=True)
     print(
         f"\n{query} @ {sf_dir}\n"
         f"A ({a}): min={min(times_a):.3f} median={statistics.median(times_a):.3f}\n"
